@@ -687,8 +687,10 @@ def main() -> None:
         # core count the session ran with (r14): the r13 driver's 8-cpu
         # scaling run bootstrapped a round-14 canonical from 8-cpu
         # minima — recording cpus lets fold_bench separate cross-core
-        # drafts instead of inferring from calibration probes
-        "cpus": os.environ.get("SPARK_GRAFT_CPUS", ""),
+        # drafts instead of inferring from calibration probes. The
+        # default is session.py's, so an unset variable records the
+        # core count the session actually ran with.
+        "cpus": os.environ.get("SPARK_GRAFT_CPUS", "32"),
         "prev_queries_recovered": len(prev),
         "stalls": {
             "reps_over_5x_steady": stall_rep_count,

@@ -418,13 +418,19 @@ def match_recognize(
     consumer that needs match positions (e.g. rows-between counts)
     reads them from MEASURES instead of re-shuffling the input through
     a separate window + joins (guide §2.4 — the NFA already paid the
-    keyed exchange and sort this window would need).
+    keyed exchange and sort this window would need). A name that is
+    already an input column raises ValueError.
     """
     pattern = list(pattern)
     pcols = list(partition_by)
     ocols = list(order_by)
     delta = pd.Timedelta(within) if within is not None else None
     out_cols = schema_col_names(output_schema)
+    if row_number_col is not None and row_number_col in df.columns:
+        raise ValueError(
+            f"row_number_col {row_number_col!r} is already an input column; "
+            "numbering the rows would overwrite it"
+        )
 
     def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(ocols, kind="mergesort").reset_index(drop=True)

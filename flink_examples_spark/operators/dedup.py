@@ -952,7 +952,11 @@ def host_line_dedup_strip(
     path already uses) instead of re-aggregating every (host, line):
     a plan that needs BOTH the index and the strip (the inline
     corpus-index builds of the hygiene-delta flagships) derives the
-    corpus-wide line aggregate ONCE (guide §2.4)."""
+    corpus-wide line aggregate ONCE (guide §2.4). The two paths are
+    not bit-identical: this one keys verdicts on ``(host, md5(line))``,
+    the default path on the exact ``(host, line)``, so an md5 collision
+    within one host can strip a line that is not boilerplate. Nothing
+    checks that the index was built over this ``df`` and ``sep``."""
     lines = _host_lines(df, id_col, host_col, text_col, sep)
     if line_index is not None:
         verdicts = (

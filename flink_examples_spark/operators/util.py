@@ -90,18 +90,23 @@ def grouped_map_in_pandas(
     That upcast also costs integer precision above 2^53, where two
     DISTINCT int64 keys can compare equal as float64 and be silently
     merged (a divergence from applyInPandas, which groups in the JVM)
-    — guarded below with a cheap vectorized magnitude assert on
-    float-upcast key columns (ADVICE r13).
+    — guarded below with a cheap vectorized magnitude assert on key
+    columns that are integral in ``df.schema`` but arrive float64. A
+    key that is a float in Spark too groups by float equality in the
+    JVM as well, so it is not guarded.
     """
     import numpy as np
     import pandas as pd
+    from pyspark.sql.types import IntegralType
 
     pcols = list(keys)
     ocols = list(order)
+    schema = df.schema
+    int_keys = {c for c in pcols if isinstance(schema[c].dataType, IntegralType)}
 
     def key_vals(pdf, c):
         v = pdf[c].to_numpy()
-        if v.dtype == np.float64:
+        if c in int_keys and v.dtype == np.float64:
             finite = v[~pd.isna(v)]
             if len(finite) and np.abs(finite).max() >= 2.0**53:
                 raise ValueError(

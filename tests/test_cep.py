@@ -836,3 +836,20 @@ def test_match_could_extend_counts_only_trailing_run():
     assert not _match_could_extend(
         pattern, [("B", 0), ("A", 1), ("B", 2), ("B", 3)]
     )
+
+
+def test_row_number_col_clashing_with_input_column_raises(spark):
+    import pytest
+
+    # numbering rows into an existing column would silently replace
+    # the values DEFINE/MEASURES read from it
+    with pytest.raises(ValueError, match="already an input column"):
+        match_recognize(
+            _ticker_df(spark),
+            partition_by=["symbol"],
+            order_by=["rowtime"],
+            pattern=[Pat("A")],
+            measures=lambda vars_map, pdf: {"n": 1},
+            output_schema="symbol string, n long",
+            row_number_col="price",
+        )

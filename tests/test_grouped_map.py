@@ -124,3 +124,21 @@ def test_float_upcast_key_above_2p53_raises(spark):
     )
     with pytest.raises(Exception, match="2\\^53|float64"):
         out.collect()
+
+
+def test_float_key_above_2p53_groups(spark):
+    # a key that is a double in Spark too is not a nullable-int upcast:
+    # the 2^53 guard must leave it alone and group like applyInPandas
+    big = 2.0**60
+    rows = [(big, i, i) for i in range(3)] + [(None, 3, 3), (2.0**53, 4, 4)]
+    df = spark.createDataFrame(rows, "k double, o long, v long")
+    out = grouped_map_in_pandas(
+        df,
+        ["k"],
+        ["o"],
+        lambda key, pdf: pd.DataFrame({"k": [key[0]], "n": [len(pdf)]}),
+        "k double, n long",
+        num_partitions=1,
+    )
+    got = sorted((r.k is None, r.k or 0.0, r.n) for r in out.collect())
+    assert got == [(False, 2.0**53, 1), (False, big, 3), (True, 0.0, 1)]
