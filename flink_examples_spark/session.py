@@ -16,6 +16,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "flink-examples-spark",
@@ -34,8 +36,11 @@ def get_spark(
     Honors ``SPARK_GRAFT_CPUS`` for local core count. All settings are
     chosen to survive a 100 TB / 1000-executor scale-up: AQE handles
     skew + partition sizing at runtime, broadcast threshold lets small
-    dimension tables avoid shuffles, and RocksDB-ready streaming state
-    config is applied when streaming ops are used.
+    dimension tables avoid shuffles.
+
+    Python workers get the package's parent directory on their
+    ``PYTHONPATH``, so UDFs that import ``flink_examples_spark`` work
+    whatever the working directory.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if master is None:
@@ -63,27 +68,9 @@ def get_spark(
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
 
-
-def streaming_conf(rocksdb: bool = True) -> dict[str, str]:
-    """Config fragment for stateful streaming queries.
-
-    Mirrors the reference's state-backend selection
-    (StateMachineExample.java:95-104 memory/fs/rocksdb): RocksDB state
-    store provider is the scale path — state spills to local disk rather
-    than executor heap, matching the reference's RocksDB incremental
-    checkpointing intent.
-    """
-    conf = {
-        "spark.sql.streaming.stateStore.stateSchemaCheck": "true",
-    }
-    if rocksdb:
-        conf["spark.sql.streaming.stateStore.providerClass"] = (
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-        )
-        conf["spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"] = "true"
-    return conf
